@@ -47,6 +47,20 @@ object Bench {
       .head().getLong(0)
   }
 
+  /** Integer setting from the environment: unset gives `default`; a value
+    * that is not an integer >= `min` gives `default` plus a stderr warning.
+    * Never throws, so a typo cannot crash a run after every query ran.
+    */
+  private[graft] def envInt(name: String, default: Int, min: Int,
+      env: Map[String, String] = sys.env): Int =
+    env.get(name).fold(default) { v =>
+      v.trim.toIntOption.filter(_ >= min).getOrElse {
+        System.err.println(s"[bench] WARN $name='$v' is not an integer " +
+          s">= $min; using $default")
+        default
+      }
+    }
+
   private def loadavg(): Double =
     try scala.io.Source.fromFile("/proc/loadavg").mkString
       .split("\\s+").head.toDouble
@@ -89,7 +103,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = envInt("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors(), min = 1)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       // the deployment path: functions arrive via the extension, not
@@ -99,15 +114,9 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Join-strategy knobs (guide §3.1), env-parameterised for scale
-      // experiments; the defaults reproduce Spark's stock behavior so the
-      // driver's bench stays comparable across rounds.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "0"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val defaultParallelism = spark.sparkContext.defaultParallelism
 
     // Warmup outside the timed section: session/codegen/parquet-footer costs
     // land here, not on the first measured query.
@@ -118,7 +127,7 @@ object Bench {
     val cpuRefStart = cpuRef()
     val cpuRefParStart = cpuRefPar()
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
-    val trials = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRIALS", "3").toInt
+    val trials = envInt("SPARK_GRAFT_BENCH_TRIALS", 3, min = 1)
     val timings =
       scala.collection.mutable.Map.empty[String, List[Double]].withDefaultValue(Nil)
     val errors = scala.collection.mutable.Map.empty[String, String]
@@ -175,7 +184,7 @@ object Bench {
     // better estimator of the undisturbed time; this is more
     // measurement, not selection). Bounded: at most `retrials` extra
     // passes over only the noisy subset, skipped when nothing is noisy.
-    val retrials = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIALS", "3").toInt
+    val retrials = envInt("SPARK_GRAFT_BENCH_RETRIALS", 3, min = 0)
     for (pass <- 0 until retrials) {
       val noisy = names.filter { case (name, _) => noisyRuns(timings(name)) }
       if (noisy.nonEmpty) {
@@ -280,8 +289,7 @@ object Bench {
     // >1.5x marks the slice contaminated like any query.
     var streamEvPerSec: Double = -1.0
     var streamSpread: Double = 0.0
-    val streamTrials =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_STREAM_TRIALS", "3").toInt
+    val streamTrials = envInt("SPARK_GRAFT_BENCH_STREAM_TRIALS", 3, min = 1)
     val streamingJson =
       try {
         val root = java.nio.file.Files.createTempDirectory("graft-bench").toString
@@ -308,13 +316,12 @@ object Bench {
         graft.streaming.StreamingCdc.runAll(spark, Seq(
           graft.streaming.StreamingCdc.StreamConfig(
             "bench-warm", s"$root/warm-in", s"$root/warm-messages",
-            s"$root/warm-tokens", s"$root/warm-ckpt",
-            sourceFormat = "changestream")), availableNow = true)
+            s"$root/warm-tokens", s"$root/warm-ckpt")), availableNow = true)
         var published = -1L
         def streamTrial(i: Int): Double = {
           val cfgS = graft.streaming.StreamingCdc.StreamConfig(
             "bench", s"$root/in", s"$root/messages-$i", s"$root/tokens-$i",
-            s"$root/ckpt-$i", sourceFormat = "changestream")
+            s"$root/ckpt-$i")
           val t0 = System.nanoTime()
           graft.streaming.StreamingCdc.runAll(spark, Seq(cfgS),
             availableNow = true)
@@ -410,11 +417,11 @@ object Bench {
         s""""contaminated_count":$ncontam,"errors_count":${errors.size},""" +
         s""""regressions":$regressions,""" +
         s""""queries":$qsTopJson,"queries_omitted":$omitted,""" +
-        s""""sf":"$sfDir","trials":$trials,"summary":true}"""
+        s""""sf":"$sfDir","trials":$trials,"cpus":$cpus,""" +
+        s""""default_parallelism":$defaultParallelism,"summary":true}"""
     // Whatever the base line leaves under the cap is the map's budget
     // (a long regressions list must not push the line past the window).
-    val lineCap =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY_CAP", "1950").toInt
+    val lineCap = envInt("SPARK_GRAFT_BENCH_SUMMARY_CAP", 1950, min = 0)
     val budgetChars = lineCap - summaryWith("{}", nq).length
     val byCost = results.filter(_._2 >= 0).sortBy(-_._2)
     val qsTop = scala.collection.mutable.ListBuffer.empty[String]

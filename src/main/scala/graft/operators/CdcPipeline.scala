@@ -97,19 +97,6 @@ object CdcPipeline {
     piped.select(col("subject"), col("msgId"), col("data")).as[OutMessage]
   }
 
-  /** The DSv2-sink projection: the same serialize-first chain as
-    * [[toMessages]], but invalidate rows are RETAINED and flagged by `op`
-    * (the sink applies the F2 cut at its epoch commit, where it sees the
-    * whole batch — [[graft.sinks.MessageSink]]). Non-publishable ops other
-    * than invalidate are dropped here, exactly like filterPublishable.
-    */
-  def toSinkRows(streamName: String)(events: DataFrame): DataFrame =
-    withMsgId(withSubject(streamName)(withPayload(
-      events.filter(col("operationType")
-        .isin((Model.PublishableOps :+ Model.InvalidateOp): _*)))))
-      .select(col("subject"), col("msgId"), col("data"),
-        col("operationType").as("op"))
-
   /** S2/A1 — top-1 resume-token lookup (internal/mongo/client.go:187-199):
     * latest committed token by insertion order. `max_by` avoids a sort —
     * a single-pass aggregate (Catalyst plans partial + final agg, no

@@ -56,10 +56,7 @@ object DedupQueries {
   private[graft] def materialize(s: SparkSession, df: DataFrame): DataFrame = {
     val out = java.nio.file.Files
       .createTempDirectory("graft-mat").toString + "/t"
-    df.write.mode("overwrite")
-      .option("compression",
-        sys.env.getOrElse("SPARK_GRAFT_MAT_CODEC", "lz4"))
-      .parquet(out)
+    df.write.mode("overwrite").option("compression", "lz4").parquet(out)
     s.read.parquet(out)
   }
 

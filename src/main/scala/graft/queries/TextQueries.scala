@@ -688,9 +688,12 @@ object TextQueries {
         .filter(col("df") === 1)
         .groupBy(col("d").as("doc_id"))
         .agg(count(lit(1)).as("n_novel"))
+      // coalesce: a NULL-text document has 0 shingles, not NULL
+      // (size(NULL) is NULL under ANSI), as in the oracle's COALESCE
       docs.select(col("doc_id"),
-          expr(s"cast(size(array_distinct(word_ngrams($toks, 3))) as bigint)")
-            .as("n_shingles"))
+          coalesce(expr(
+            s"cast(size(array_distinct(word_ngrams($toks, 3))) as bigint)"),
+            lit(0L)).as("n_shingles"))
         .join(novel, Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_shingles"),
           coalesce(col("n_novel"), lit(0L)).as("n_novel"))

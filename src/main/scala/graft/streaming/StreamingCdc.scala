@@ -11,13 +11,15 @@ import graft.operators.CdcPipeline
 
 /** The reference's streaming runtime (SURVEY.md §2/§3), Spark-native:
   *
-  *   S1  change-stream source  → `readStream` over a parquet directory of
+  *   S1  change-stream source  → `readStream` through
+  *       graft.sources.ChangeStreamSource over a parquet directory of
   *       change-event envelopes (the zero-egress stand-in for a MongoDB
-  *       change stream; offsets = file positions, checkpointed)
+  *       change stream; offsets = resume tokens, checkpointed)
   *   F1  publishable filter, P1–P4 projections → CdcPipeline.toMessages
   *   F2  invalidate → batch truncated at the invalidate, query stopped
   *       (internal/mongo/client.go:232-236)
-  *   K1  publish → idempotent append to the `messages` table
+  *   K1  publish → idempotent append to the `messages` table, one
+  *       foreachBatch call per micro-batch (processBatch)
   *   K2  token commit → append to the `tokens` table AFTER the publish —
   *       the commit point (internal/mongo/client.go:248-254)
   *   C1  per-collection fan-out → one StreamingQuery per config
@@ -49,27 +51,15 @@ object StreamingCdc {
       streamName: Option[String] = None, // P5 default: upper(name)
       tokensCapped: Boolean = false,     // D1 capped-collection analog
       tokensMaxRows: Int = 1024,
-      maxFilesPerTrigger: Int = 8,
       // D2 — collMod changeStreamPreAndPostImages (client.go:166-173):
       // when disabled, pre-images are unavailable and
       // fullDocumentBeforeChange publishes as absent (update_test.go:52-56
       // version gate).
       preAndPostImages: Boolean = true,
-      // S1 source: "changestream" = the DSv2 MicroBatchStream with
-      // resume-token offsets + F1 pushdown (graft.sources); "parquet" =
-      // the plain file source (offsets = file positions, micro-batches
-      // shaped by maxFilesPerTrigger).
-      sourceFormat: String = "parquet",
-      // changestream-source admission control: row budget per trigger
-      // (whole files in token order until the budget is hit). None =
-      // all available.
-      maxRowsPerTrigger: Option[Long] = None,
-      // K1/K2 sink: "foreachbatch" = the micro-batch driver loop below;
-      // "dsv2" = the DataSource V2 StreamingWrite (graft.sinks
-      // .MessageSink) — same two-phase publish/token contract declared
-      // through Spark's epoch commit API. Parity + crash-replay pinned
-      // on both paths by StreamingCdcSpec/StreamFuzz.
-      sinkFormat: String = "foreachbatch") {
+      // S1 admission control: row budget per trigger (whole files in
+      // token order until the budget is hit, so Some(1) admits one file
+      // per trigger). None = all available.
+      maxRowsPerTrigger: Option[Long] = None) {
     def resolvedStreamName: String =
       streamName.getOrElse(Model.defaultStreamName(name))
   }
@@ -115,16 +105,12 @@ object StreamingCdc {
   private def invalidatedMarker(tokensDir: String) =
     new org.apache.hadoop.fs.Path(tokensDir, "_invalidated")
 
-  private[graft] def markInvalidatedAt(spark: SparkSession, name: String,
-      tokensDir: String): Unit = {
-    invalidated.put(name, true)
-    val p = invalidatedMarker(tokensDir)
+  private def markInvalidated(spark: SparkSession, cfg: StreamConfig): Unit = {
+    invalidated.put(cfg.name, true)
+    val p = invalidatedMarker(cfg.tokensDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) fs.create(p, true).close()
   }
-
-  private def markInvalidated(spark: SparkSession, cfg: StreamConfig): Unit =
-    markInvalidatedAt(spark, cfg.name, cfg.tokensDir)
 
   private def hasInvalidatedMarker(spark: SparkSession,
       cfg: StreamConfig): Boolean = {
@@ -163,12 +149,8 @@ object StreamingCdc {
 
   private def committedBatches(
       spark: SparkSession, cfg: StreamConfig): java.util.Set[java.lang.Long] =
-    committedBatchIds(spark, cfg.name, cfg.tokensDir)
-
-  private[graft] def committedBatchIds(spark: SparkSession, name: String,
-      tokensDir: String): java.util.Set[java.lang.Long] =
-    ledgerCache.computeIfAbsent(tokensDir, _ =>
-      Observability.CommandMetrics.time(name, "tokens_read") {
+    ledgerCache.computeIfAbsent(cfg.tokensDir, _ =>
+      Observability.CommandMetrics.time(cfg.name, "tokens_read") {
         val s = ConcurrentHashMap.newKeySet[java.lang.Long]()
         // Footer fast path (round-12 fixed-cost shave): the parquet
         // footers carry row counts, so an EMPTY ledger — every fresh
@@ -177,7 +159,7 @@ object StreamingCdc {
         // reads through Spark: it is rare per process lifetime and the
         // table is capped-small.
         val hconf = spark.sparkContext.hadoopConfiguration
-        val dir = new org.apache.hadoop.fs.Path(tokensDir)
+        val dir = new org.apache.hadoop.fs.Path(cfg.tokensDir)
         val fs = dir.getFileSystem(hconf)
         val parts = fs.listStatus(dir).map(_.getPath)
           .filter(_.getName.startsWith("part-"))
@@ -188,7 +170,7 @@ object StreamingCdc {
           try r.getRecordCount finally r.close()
         }.sum
         if (totalRows > 0)
-          spark.read.parquet(tokensDir).select("batch_id")
+          spark.read.parquet(cfg.tokensDir).select("batch_id")
             .collect().foreach(r => s.add(r.getLong(0)))
         s
       })
@@ -221,12 +203,6 @@ object StreamingCdc {
     // caching materializes every row into block storage to save a
     // columnar re-scan of ~0 rows (~15% throughput tax measured at the
     // bench SF).
-    processUncachedBatch(cfg, batch, batchId)
-  }
-
-  private def processUncachedBatch(
-      cfg: StreamConfig, batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     import Observability.CommandMetrics
     // F2 — invalidate cut, observed (no separate action): `cut_seen` is
     // non-null iff the batch contains an invalidate.
@@ -384,29 +360,25 @@ object StreamingCdc {
     * (max_by) and the ledger (set membership) are insensitive to
     * duplicates, and the next trim converges the row count.
     */
-  private[graft] def trimTokens(spark: SparkSession, cfg: StreamConfig): Unit =
-    trimTokensAt(spark, cfg.name, cfg.tokensDir, cfg.tokensMaxRows)
-
-  private[graft] def trimTokensAt(spark: SparkSession, name: String,
-      tokensDir: String, tokensMaxRows: Int): Unit = {
-    val t = spark.read.parquet(tokensDir)
-    if (t.count() > tokensMaxRows) {
+  private[graft] def trimTokens(spark: SparkSession, cfg: StreamConfig): Unit = {
+    val t = spark.read.parquet(cfg.tokensDir)
+    if (t.count() > cfg.tokensMaxRows) {
       val hconf = spark.sparkContext.hadoopConfiguration
-      val dir = new org.apache.hadoop.fs.Path(tokensDir)
+      val dir = new org.apache.hadoop.fs.Path(cfg.tokensDir)
       val fs = dir.getFileSystem(hconf)
       val oldFiles = fs.listStatus(dir).map(_.getPath)
         .filter(_.getName.startsWith("part-"))
-      val keep = t.orderBy(col("batch_id").desc).limit(tokensMaxRows)
+      val keep = t.orderBy(col("batch_id").desc).limit(cfg.tokensMaxRows)
         .collect()
       val kept = spark.createDataFrame(
         java.util.Arrays.asList(keep: _*), tokenSchema)
-      kept.coalesce(1).write.mode("append").parquet(tokensDir)
+      kept.coalesce(1).write.mode("append").parquet(cfg.tokensDir)
       // fault-injection hook in the trim RACE WINDOW (kept rows appended,
       // old files not yet deleted — the crash point the scaladoc above
       // reasons about; batchId -1 marks "inside trim"). No-op in
       // production; StreamFuzz v2 kills here to probe the duplicate-file
       // recovery path across restarts.
-      faultpoint(name, -1L)
+      faultpoint(cfg.name, -1L)
       oldFiles.foreach(p => fs.delete(p, false))
     }
   }
@@ -427,61 +399,22 @@ object StreamingCdc {
     // Re-seed the ledger cache from disk at (re)start: another process may
     // have committed since, and tests recreate dirs at the same path.
     ledgerCache.remove(cfg.tokensDir)
-    val src0 =
-      if (cfg.sourceFormat == "changestream") {
-        val r = spark.readStream
-          .format(classOf[graft.sources.ChangeStreamSource].getName)
-          // F1 in the READER on the streaming path: Spark never runs
-          // filter pushdown on streaming DSv2 scans, so the op set rides
-          // in as a source option (see ChangeStreamSource) — the reader
-          // skips non-publishable rows before materializing them.
-          .option("ops",
-            (Model.PublishableOps :+ Model.InvalidateOp).mkString(","))
-        cfg.maxRowsPerTrigger.foreach(n =>
-          r.option("maxRowsPerTrigger", n.toString))
-        r.load(cfg.inputDir)
-      } else
-        spark.readStream
-          .schema(Model.changeEventSchema)
-          .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-          .parquet(cfg.inputDir)
-    // F1 at the SOURCE on the streaming path too (round 12): DSv2
-    // pushdown engages at STREAM planning, not per foreachBatch batch —
-    // without a filter in the streaming DAG the reader materializes
-    // every op kind each trigger and filterPublishable re-drops them
-    // spark-side per batch. Publishable ∪ invalidate is exactly the set
-    // processBatch consumes (F2 needs the invalidate rows for the cut;
-    // drop/rename were always skipped downstream).
-    val src = src0.filter(col("operationType")
-      .isin((Model.PublishableOps :+ Model.InvalidateOp): _*))
-    val w =
-      if (cfg.sinkFormat == "dsv2") {
-        // K1/K2 through the DSv2 StreamingWrite (graft.sinks.MessageSink):
-        // the projection (D2 image mask included) moves INTO the stream
-        // dataflow — invalidate rows ride along flagged by `op`, and the
-        // F2 cut + token commit happen in the sink's epoch commit. The
-        // per-file token ordering the foreachBatch path got from
-        // sortWithinPartitions happens in the sink's DataWriter instead
-        // (Spark's analyzer rejects any Sort on a streaming plan).
-        val effective =
-          if (cfg.preAndPostImages) src
-          else src.withColumn("fullDocumentBeforeChange",
-            lit(null).cast("string"))
-        CdcPipeline.toSinkRows(cfg.resolvedStreamName)(effective)
-          .writeStream
-          .queryName(cfg.name)
-          .option("checkpointLocation", cfg.checkpointDir)
-          .format(classOf[graft.sinks.MessageSink].getName)
-          .option("path", cfg.messagesDir)
-          .option("tokensDir", cfg.tokensDir)
-          .option("name", cfg.name)
-          .option("capped", cfg.tokensCapped.toString)
-          .option("maxTokRows", cfg.tokensMaxRows.toString)
-      } else
-        src.writeStream
-          .queryName(cfg.name)
-          .option("checkpointLocation", cfg.checkpointDir)
-          .foreachBatch(processBatch(cfg) _)
+    val w = spark.readStream
+      .format(classOf[graft.sources.ChangeStreamSource].getName)
+      // F1 in the READER: Spark never runs filter pushdown on streaming
+      // DSv2 scans, so the op set rides in as a source option (see
+      // ChangeStreamSource) and the reader skips every other row before
+      // materializing it. Publishable ∪ invalidate is exactly the set
+      // processBatch consumes (F2 needs the invalidate rows for the cut).
+      .option("ops",
+        (Model.PublishableOps :+ Model.InvalidateOp).mkString(","))
+      .options(cfg.maxRowsPerTrigger
+        .map(n => "maxRowsPerTrigger" -> n.toString).toMap)
+      .load(cfg.inputDir)
+      .writeStream
+      .queryName(cfg.name)
+      .option("checkpointLocation", cfg.checkpointDir)
+      .foreachBatch(processBatch(cfg) _)
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }
 

@@ -87,4 +87,16 @@ class ConfigSpec extends SparkSuite {
       ConnectorConfig.load(write("not-a-connector: {}"), env = Map.empty)
     }
   }
+
+  test("Bench integer settings: unset or malformed values fall back to " +
+      "the default, never throw") {
+    def get(v: Option[String]) =
+      Bench.envInt("SPARK_GRAFT_BENCH_TRIALS", 3, min = 1,
+        env = v.map("SPARK_GRAFT_BENCH_TRIALS" -> _).toMap)
+    assert(get(None) == 3)
+    assert(get(Some("5")) == 5)
+    assert(get(Some(" 7 ")) == 7)
+    for (bad <- Seq("", "three", "2.5", "0", "-1", "99999999999"))
+      assert(get(Some(bad)) == 3, bad)
+  }
 }

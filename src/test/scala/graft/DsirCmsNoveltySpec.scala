@@ -132,4 +132,20 @@ class DsirCmsNoveltySpec extends SparkSuite {
       }
     }
   }
+
+  test("n-gram novelty: a NULL-text document has 0 shingles, 0 novel, " +
+      "NULL novelty") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-novelty").toString
+    Seq((1L, "en", Option("a b c d")), (2L, "en", Option.empty[String]))
+      .toDF("doc_id", "lang", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val got = TextQueries.queries("text_ngram_novelty")(spark, dir)
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(got(1L).getLong(1) == 2L && got(1L).getLong(2) == 2L)
+    val nullDoc = got(2L)
+    assert(!nullDoc.isNullAt(1) && nullDoc.getLong(1) == 0L, "n_shingles")
+    assert(!nullDoc.isNullAt(2) && nullDoc.getLong(2) == 0L, "n_novel")
+    assert(nullDoc.isNullAt(3), "novelty")
+  }
 }

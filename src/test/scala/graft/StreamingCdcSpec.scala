@@ -30,9 +30,10 @@ class StreamingCdcSpec extends SparkSuite {
   private def writeBatchFile(dir: String, events: Seq[ChangeEvent]): Unit =
     events.toDF().coalesce(1).write.mode("append").parquet(dir)
 
+  // a one-row budget admits exactly one whole file per trigger
   private def cfg(name: String, root: String): StreamConfig =
     StreamConfig(name, s"$root/in", s"$root/messages", s"$root/tokens",
-      s"$root/checkpoint", maxFilesPerTrigger = 1)
+      s"$root/checkpoint", maxRowsPerTrigger = Some(1L))
 
   private def readMessages(c: StreamConfig): DataFrame =
     spark.read.parquet(c.messagesDir)
@@ -54,6 +55,17 @@ class StreamingCdcSpec extends SparkSuite {
     val tokens = spark.read.parquet(c.tokensDir)
     assert(tokens.count() == 2) // one commit per micro-batch
     assert(StreamingCdc.latestToken(spark, c.tokensDir).contains("000100"))
+    // per-batch msgId ranges strictly increase with batch_id
+    val ranges = readMessages(c).groupBy(col("batch_id"))
+      .agg(min(col("msgId")).as("lo"), max(col("msgId")).as("hi"))
+      .orderBy(col("batch_id"))
+      .select("lo", "hi").as[(String, String)].collect()
+    assert(ranges.length == 2 && ranges.sliding(2).forall {
+      case Array((_, hiA), (loB, _)) => hiA < loB
+      case _ => true
+    }, s"batch ranges overlap: ${ranges.toSeq}")
+    // each token row counts exactly the messages its batch published
+    assert(tokens.agg(sum(col("n_published"))).head().getLong(0) == 100L)
   }
 
   test("C2: restart from checkpoint picks up only new events, no loss, " +
@@ -79,11 +91,23 @@ class StreamingCdcSpec extends SparkSuite {
     writeBatchFile(c.inputDir,
       (11 to 15).map(ev(_, "insert")) :+ ev(16, "invalidate"))
     writeBatchFile(c.inputDir, (17 to 20).map(ev(_, "insert")))
-    StreamingCdc.runAll(spark, Seq(c), availableNow = true)
+    // mid-batch: the invalidate sits INSIDE a file, so events after it in
+    // the same micro-batch must be cut too, not just later batches
+    val m = cfg("s3-mid", tmp())
+    writeBatchFile(m.inputDir, (1 to 10).map(ev(_, "insert")))
+    writeBatchFile(m.inputDir, ((11 to 15).map(ev(_, "insert")) :+
+      ev(16, "invalidate")) ++ (17 to 20).map(ev(_, "insert")))
+    writeBatchFile(m.inputDir, (21 to 30).map(ev(_, "insert")))
+    StreamingCdc.runAll(spark, Seq(c, m), availableNow = true)
 
-    assert(StreamingCdc.wasInvalidated("s3"))
-    val ids = readMessages(c).select("msgId").as[String].collect().toSet
-    assert(ids == (1 to 15).map(i => f"$i%06d").toSet)
+    for (s <- Seq(c, m)) {
+      assert(StreamingCdc.wasInvalidated(s.name))
+      val ids = readMessages(s).select("msgId").as[String].collect().toSet
+      assert(ids == (1 to 15).map(i => f"$i%06d").toSet, s.name)
+      // the truncated batch commits the last token before the cut
+      assert(StreamingCdc.latestToken(spark, s.tokensDir).contains("000015"),
+        s.name)
+    }
   }
 
   test("F1 streaming: drop/rename/dropDatabase are silently skipped, " +
@@ -282,7 +306,7 @@ class StreamingCdcSpec extends SparkSuite {
       .select(lpad(col("event_id").cast("string"), 12, "0").as("id"))
       .as[String].collect().sorted.toSeq
     assert(expected.size == 80190) // the bench's publishable subset
-    val c = cfg("s-matrix", root).copy(sourceFormat = "changestream",
+    val c = cfg("s-matrix", root).copy(
       maxRowsPerTrigger = Some(16384L)) // ~6 batches over 16 files
 
     // Two kill points, each in the worst window (publish landed, token
@@ -361,8 +385,7 @@ class StreamingCdcSpec extends SparkSuite {
       "fallback legitimately adds a probe job if the Observation ever " +
       "times out — neither should fail this budget pin") {
     val root = tmp()
-    val c = cfg("s-jobs", root).copy(
-      sourceFormat = "changestream", maxRowsPerTrigger = Some(25L))
+    val c = cfg("s-jobs", root).copy(maxRowsPerTrigger = Some(25L))
     (0 until 4).foreach(b => writeBatchFile(c.inputDir,
       (b * 25 + 1 to b * 25 + 25).map(ev(_, "insert"))))
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
